@@ -31,13 +31,13 @@ import org.apache.spark.sql.SparkSession
   * is stochastic, not rank-correlated.
   *
   * Worker protocol: env `SPARK_GRAFT_BENCH_WORKER=1`, args =
-  * (sfDir, comma-joined names, outFile). The worker builds the same
-  * session config the engine benches under, warms ONLY its group —
-  * one pass at sf0.001 then one at sf0.01, so light queries reach
+  * (sfDir, comma-joined names, outFile). The worker takes its session
+  * from [[GraftSession]] and runs [[timeGroup]] over its group — one
+  * warm pass at sf0.001 then one at sf0.01, so light queries reach
   * JIT before timing (session init, codegen, JIT are one-time costs
-  * a long-running cluster never re-pays per query), then times each
-  * query REPS times with caches dropped and a GC between runs,
-  * writing one TSV line per query: `name<TAB>r1,r2,..<TAB>[err]`.
+  * a long-running cluster never re-pays per query), then each query
+  * REPS times with caches dropped and a GC between runs — writing
+  * one TSV line per query: `name<TAB>r1,r2,..<TAB>[err]`.
   * Classpath and JDK-17 module opens are reconstructed from this
   * JVM's own code locations, so forking works under sbt runMain and
   * bare java alike; a group whose fork fails is re-timed in-process
@@ -71,75 +71,54 @@ object Bench {
   // Worker: one bounded group of queries in a fresh JVM
   // ---------------------------------------------------------------
 
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // see GraftSession: re-evaluates expensive generator inputs
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // see GraftSession: AQE sizes cache-fill partitions by bytes
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  private def dropAllCaches(spark: SparkSession): Unit = {
-    // Several operators persist() staging tables session-scoped; a
-    // timed query over the same sf dir would otherwise silently read
-    // the warmup's InMemoryRelations (cache lookup matches
-    // canonicalized plans) and measure cached scans.
-    graft.datapipe.Staging.releaseAll()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-  }
-
-  /** (name, runs-in-seconds, error). A query that dies must NOT read
-    * as a fast success.
-    */
-  private def timeGroup(spark: SparkSession, sfDir: String,
-                        names: Seq[String]): Seq[(String, Vector[Double], Option[String])] = {
-    // Warmup (untimed): run each of THIS GROUP's queries at sf0.001
-    // and then at sf0.01 — session init, codegen compilation, and
-    // JIT never land in a timed run (measured warm-vs-cold deltas of
-    // 3-15 s were one-time cost, not plan cost), while the group
-    // bound keeps accumulated state from ever exceeding ~25 queries'
-    // worth. The second (sf0.01) pass exists for the LIGHT queries:
-    // with per-group JVMs a sub-second query whose group warmed only
-    // at sf0.001 ran before JIT fully arrived and read up to ~1.5×
-    // its long-lived-JVM cost (r12 wordpiece_encode 1.72 s vs r11's
-    // 1.14); a second pass with ~10× the rows gives the compiler the
-    // samples it needs. Override dirs (comma-separated) with
-    // SPARK_GRAFT_BENCH_WARM.
+  /** Warm dirs: sf0.001 then sf0.01 (SPARK_GRAFT_BENCH_WARM, csv,
+    * overrides). The sf0.01 pass is for LIGHT queries: warmed only at
+    * sf0.001 they ran before JIT fully arrived and read up to ~1.5×
+    * (r12 wordpiece_encode 1.72 s vs r11's 1.14). */
+  private[graft] def warmDirs: Seq[String] = {
     val configured = sys.env.get("SPARK_GRAFT_BENCH_WARM")
       .map(_.split(",").toSeq)
       .getOrElse(Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01"))
-    val warmDirs = configured.filter(d => Files.isDirectory(Paths.get(d)))
+    val existing = configured.filter(d => Files.isDirectory(Paths.get(d)))
     // a missing warm dir (typo'd override, absent fixture) must be
     // LOUD — with zero warm passes, session-init/codegen/JIT land in
     // the timed window and the artifact would publish cold numbers
     // indistinguishable from warmed ones
-    for (d <- configured.filterNot(warmDirs.toSet))
+    for (d <- configured.filterNot(existing.toSet))
       System.err.println(s"BENCH WARNING: warm dir $d missing — skipped")
-    if (warmDirs.isEmpty)
+    if (existing.isEmpty)
       System.err.println("BENCH WARNING: NO warm dirs exist — timing cold")
-    for (wd <- warmDirs; n <- names; fn <- SparkEntry.queries.get(n))
+    existing
+  }
+
+  /** Untimed: run each named query once per warm dir (failures are
+    * the timed run's to report), then [[GraftSession.reset]].
+    */
+  private[graft] def warm(spark: SparkSession, names: Seq[String],
+                          dirs: Seq[String]): Unit = {
+    for (wd <- dirs; n <- names; fn <- SparkEntry.queries.get(n))
       try fn(spark, wd).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
-    dropAllCaches(spark)
+    GraftSession.reset(spark)
+  }
+
+  /** The one warm → reset → time loop. Warming ONLY these queries
+    * keeps session init, codegen and JIT out of every timed run
+    * (measured warm-vs-cold deltas of 3-15 s were one-time cost) while
+    * bounding accumulated JVM state; then each query runs `reps` times
+    * with caches dropped and a GC between. Returns (name, runs in
+    * seconds, error): a query that dies must NOT read as a success. */
+  private[graft] def timeGroup(spark: SparkSession, sfDir: String,
+                               names: Seq[String], warmDirs: Seq[String],
+                               reps: Int): Seq[(String, Vector[Double], Option[String])] = {
+    warm(spark, names, warmDirs)
     names.map { name =>
       val fn = SparkEntry.queries(name)
       val runs = Vector.newBuilder[Double]
       var err: Option[String] = None
       var r = 0
-      while (r < REPS && err.isEmpty) {
-        dropAllCaches(spark)
+      while (r < reps && err.isEmpty) {
+        GraftSession.reset(spark)
         // collect the previous run's heap debt outside the window
         System.gc()
         val t0 = System.nanoTime()
@@ -159,9 +138,8 @@ object Bench {
 
   private def workerMain(args: Array[String]): Unit = {
     val Array(sfDir, namesCsv, outFile) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = buildSession(cpus)
-    val rows = timeGroup(spark, sfDir, namesCsv.split(",").toSeq)
+    val spark = GraftSession.get()
+    val rows = timeGroup(spark, sfDir, namesCsv.split(",").toSeq, warmDirs, REPS)
     val tsv = rows.map { case (n, runs, err) =>
       val clean = err.getOrElse("").map(c => if (c < ' ') ' ' else c)
       s"$n\t${runs.mkString(",")}\t$clean"
@@ -248,7 +226,9 @@ object Bench {
         (parts(0), runs, err)
       }.toSeq
 
-  private def jstr(s: String): String =
+  /** JSON string literal with quote, backslash and every control
+    * char escaped (Verify's oracle_sql.json depends on it). */
+  private[graft] def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"
       case c if c < ' ' => f"\\u${c.toInt}%04x"
@@ -293,7 +273,7 @@ object Bench {
     // published artifact always covers the full catalog
     val allNames0 = SparkEntry.queries.keys.toSeq.sorted
     val allNames = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(csv => { val keep = csv.split(",").toSet; allNames0.filter(keep) })
+      .map(csv => allNames0.filter(SparkEntry.select(csv).toSet))
       .getOrElse(allNames0)
     // GROUP ASSIGNMENT, two regimes:
     //  - with a prior-round medians sidecar (BENCHPRIOR.json, written
@@ -593,11 +573,7 @@ object Bench {
       .map { case (k, v, _) => s"${jstr(k)}:${median(v)}" }
       .mkString("{", ",", "}")
     val midpackJson = midpackNames.map(jstr).mkString("[", ",", "]")
-    val warmJson = sys.env.get("SPARK_GRAFT_BENCH_WARM")
-      .map(_.split(",").toSeq)
-      .getOrElse(Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01"))
-      .filter(d => Files.isDirectory(Paths.get(d)))
-      .map(jstr).mkString("[", ",", "]")
+    val warmJson = warmDirs.map(jstr).mkString("[", ",", "]")
     val suspectsJson = suspectNames.map(jstr).mkString("[", ",", "]")
     println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${finalResults.size},"n_failed":${finalResults.count(_._3.nonEmpty)},"slowest":$slowest,"isolation":"$isolation","n_groups":${groups.size},"fresh_jvm_recheck":$recheckJson,"recheck_max_inflation":$maxRatioPublished,"recheck_max_raw_inflation":$maxRatioRaw,"recheck_adopted":$adoptedJson,"recheck_seed":$recheckSeed,"recheck_midpack":$midpackJson,"recheck_suspects":$suspectsJson,"recheck_suspects_dropped":$suspectsDropped,"warm_dirs":$warmJson,"sf":"$sfDir","reps":$REPS,$loadJson}""")
     // LAST line, bounded < 1500 chars BY CONSTRUCTION: the driver
@@ -627,8 +603,8 @@ object Bench {
     */
   private def inProcessGroup(sfDir: String,
                              names: Seq[String]): Seq[(String, Vector[Double], Option[String])] = {
-    val spark = buildSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    try timeGroup(spark, sfDir, names)
+    val spark = GraftSession.get()
+    try timeGroup(spark, sfDir, names, warmDirs, REPS)
     finally spark.stop()
   }
 }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.execution.ExplainMode
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val names = args(2).split(",").toSeq
+    val names = SparkEntry.select(args(2))
     Files.createDirectories(Paths.get(outDir))
     val spark = GraftSession.builder().appName("graft-explain").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -36,9 +36,7 @@ object ExplainDump {
         case e: Throwable =>
           println(s"FAIL $n: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
       }
-      graft.datapipe.Staging.releaseAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      GraftSession.reset(spark)
     }
     spark.stop()
   }

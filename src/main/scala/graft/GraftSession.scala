@@ -2,16 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Standard session factory for the engine.
+/** The engine's one session factory: every main, tool, test and the
+  * bench builds its session here, so the engine that is verified and
+  * timed is the engine under test.
   *
-  * Tuned for the container's local[32] harness but with settings that
-  * carry to a multi-executor cluster: AQE on (runtime shuffle
-  * coalescing + skew-join splitting), shuffle partitions sized to the
-  * parallelism rather than the 200 default, UTC session time zone for
-  * oracle parity.
+  * Runs `local[cpus]`, where `cpus` defaults to `SPARK_GRAFT_CPUS`
+  * and else to every available core, with settings that carry to a
+  * multi-executor cluster: AQE on (runtime shuffle coalescing +
+  * skew-join splitting), shuffle partitions sized to the parallelism
+  * rather than the 200 default, UTC session time zone for oracle
+  * parity.
   */
 object GraftSession {
-  def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession.Builder =
+  def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")
@@ -53,5 +57,16 @@ object GraftSession {
     val spark = builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Drop every staged table, cached plan and persisted RDD, so the
+    * next query over the same inputs cannot silently read an earlier
+    * run's InMemoryRelations or memos (cache lookup matches
+    * canonicalized plans).
+    */
+  def reset(spark: SparkSession): Unit = {
+    graft.datapipe.Staging.releaseAll()
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 
 /** Stage-level profiler for the optimization rounds:
   * `runMain graft.ProfileOne <query> <sfDir> [reps]`
-  * warms at sf0.001 + sf0.01 (matching Bench's warm discipline), then
+  * warms over [[Bench.warmDirs]] (Bench's own warm list), then
   * runs the query once (per rep) with a listener that records every
   * completed stage: wall duration, summed executor run time, task
   * count, shuffle read/write bytes, and the stage's callsite (which
@@ -22,15 +22,7 @@ object ProfileOne {
     val spark = GraftSession.builder().appName("profile-one").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries(name)
-    def drop(): Unit = {
-      graft.datapipe.Staging.releaseAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
-    for (wd <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01"))
-      try fn(spark, wd).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    drop()
+    Bench.warm(spark, Seq(name), Bench.warmDirs)
 
     case class StageRow(id: Int, name: String, wallMs: Long, execMs: Long,
                         tasks: Int, shufReadMB: Double, shufWriteMB: Double,
@@ -57,7 +49,7 @@ object ProfileOne {
     }
     spark.sparkContext.addSparkListener(listener)
     for (r <- 1 to reps) {
-      drop()
+      GraftSession.reset(spark)
       System.gc()
       rows.clear(); jobs = 0
       val t0 = System.nanoTime()

@@ -1,40 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local timing helper: warm + time a comma-separated subset of
   * catalog queries against one sf dir (the per-query slice of what
   * [[Bench]] does for the whole board — for iterating on a new
-  * operator without a full bench run).
+  * operator without a full bench run). Runs [[Bench.timeGroup]] with
+  * the sf dir itself as the only warm dir and one timed rep: the
+  * whole subset is warmed first, then each query is timed once.
   *
   * Usage: runMain graft.TimeQueries <sfDir> <name,name,...>
   */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args(1).split(",").toSeq
-    // the SAME session factory the engine uses everywhere — a config
-    // drift between the timing tool and the real sessions would make
-    // it measure a differently-configured engine
+    val names = SparkEntry.select(args(1))
     val spark = GraftSession.builder().appName("graft-time").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    def drop(): Unit = {
-      graft.datapipe.Staging.releaseAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
-    for (n <- names) {
-      val fn = SparkEntry.queries(n)
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => println(s"   WARM-FAIL $n: ${e.getMessage}") }
-      drop()
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        println(f"${(System.nanoTime() - t0) / 1e9}%7.2f  $n")
-      } catch { case e: Throwable => println(s"   FAIL $n: ${e.getMessage}") }
-      drop()
-    }
+    for ((n, runs, err) <- Bench.timeGroup(spark, sfDir, names, Seq(sfDir), reps = 1))
+      err match {
+        case Some(e) => println(s"   FAIL $n: $e")
+        case None => println(f"${runs.head}%7.2f  $n")
+      }
     spark.stop()
   }
 }

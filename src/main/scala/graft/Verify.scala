@@ -1,72 +1,43 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json and _errors.json, for the DuckDB oracle compare.
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [name,name,...]`,
+  * then `python3 tools/local_verify.py <sfDir> <outDir>`. The optional
+  * third argument restricts the dump to those catalog entries (see
+  * [[SparkEntry.select]]); without it every entry is dumped.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (local
-    // iteration only — the driver always calls with 2 args)
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // see GraftSession: re-evaluates expensive generator inputs
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // see GraftSession: AQE sizes cache-fill partitions by bytes.
-      // Config parity with the benched engine (r19, advisor item):
-      // the oracle-correctness run must exercise the exact session
-      // configuration Bench times, or a partitioning-sensitive
-      // defect could pass Verify and ship in the bench config.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = SparkEntry.queries
+    val names: Seq[String] =
+      args.lift(2).map(SparkEntry.select).getOrElse(queries.keys.toSeq.sorted)
+    val keep = names.toSet
+    val spark = GraftSession.get()
     new java.io.File(outDir).mkdirs()
     // per-query failures must surface, not vanish: a failed query gets
     // NO <name>/ parquet dir (so the driver records it as missing/err)
     // AND an entry in _errors.json so the failure is greppable from the
     // round artifacts. Round 8 lost 36 queries to silent swallowing.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    for (name <- names) {
+      try queries(name)(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = s"${e.getClass.getName}: ${e.getMessage}"
         System.err.println(s"[verify] $name failed: $msg")
         errors(name) = msg
       }
-      // drop each query's session-scoped staging caches (see Staging)
-      graft.datapipe.Staging.releaseAll()
-      spark.catalog.clearCache()
+      GraftSession.reset(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }
+        .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql.filter(kv => keep(kv._1))))
+    Files.writeString(Paths.get(s"$outDir/_errors.json"), obj(errors))
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: " +
         errors.keys.mkString(", "))

@@ -221,25 +221,8 @@ object Staging {
     }
   }
 
-  /** Always-columnar staging, regardless of [[mode]]: cache-manager
-    * persist (compressed columnar InMemoryRelation batches). For the
-    * few staged tables whose dominant cost is being RE-SCANNED many
-    * times by compute-heavy consumers (wide token-array frames read
-    * 8–9× by the BLEU gram explodes), the columnar cache's vectorized
-    * scan beats checkpoint-mode row blocks (measured r18: eval_bleu
-    * +0.5 s under checkpoint staging, recovered by this). Use
-    * [[persist]]/`.stage()` everywhere else — plan truncation is the
-    * better default for long staged pipelines.
-    */
-  def persistColumnar(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    live.add(p)
-    p
-  }
-
   /** `.stage()` chain syntax for [[persist]]. */
   implicit class Staged(private val df: DataFrame) extends AnyVal {
     def stage(): DataFrame = Staging.persist(df)
-    def stageColumnar(): DataFrame = Staging.persistColumnar(df)
   }
 }

@@ -104,8 +104,6 @@ object DidBootstrap {
       * Idempotent — re-hosting an already-hosted DID is a no-op
       * success, mirroring the reference's upsert. */
     def host(did: String): Boolean = { hosted.add(did); true }
-
-    def isHosted(did: String): Boolean = hosted.contains(did)
   }
 
   private def md5Hex(s: String): String =

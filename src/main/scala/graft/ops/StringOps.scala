@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
   * derivation stays codegen'd.
   *
   * Reference: data_synthesizer/service/veramo/create_web_url.go:15-59
-  * (sanitize: strip non-[a-zA-Z0-9._-], collapse dashes, lower) and the
-  * inverse parse at host_did_web/src/main.go:398-417.
+  * (sanitize: strip non-[a-zA-Z0-9._-], collapse dashes, lower).
   */
 object StringOps {
 
@@ -21,7 +20,4 @@ object StringOps {
   def didWeb(host: Column, project: Column, entity: Column): Column =
     concat_ws(":", lit("did"), lit("web"),
       sanitizeSegment(host), sanitizeSegment(project), sanitizeSegment(entity))
-
-  /** Inverse: DID string → path segments. host_did_web/src/main.go:398-417. */
-  def didSegments(did: Column): Column = split(did, ":")
 }

@@ -30,20 +30,15 @@ object TimeKnnCells {
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("emb"))
-    def drop(): Unit = {
-      graft.datapipe.Staging.releaseAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
     for (c <- cells) {
       def mk() = Similarity.knnGraph(emb, k = 5, cells = c, iters = 3)
       val edges = mk().count() // warm + the recall-side readout
-      drop()
+      GraftSession.reset(spark)
       val runs = (1 to 2).map { _ =>
         System.gc()
         val t0 = System.nanoTime()
         mk().write.format("noop").mode("overwrite").save()
-        drop()
+        GraftSession.reset(spark)
         (System.nanoTime() - t0) / 1e9
       }
       val label = if (c == 0) "auto" else c.toString

@@ -30,17 +30,12 @@ object TimeVecIndex {
     val spark = GraftSession.get()
     spark.sparkContext.setLogLevel("ERROR")
 
-    def drop(): Unit = {
-      graft.datapipe.Staging.releaseAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
     def time(label: String)(body: => Unit): Unit = {
-      body; drop() // warm
+      body; GraftSession.reset(spark) // warm
       val runs = (1 to 2).map { _ =>
         System.gc()
         val t0 = System.nanoTime()
-        body; drop()
+        body; GraftSession.reset(spark)
         (System.nanoTime() - t0) / 1e9
       }
       println(f"VEC-INDEX $label%-22s ${runs.min}%7.2f s  (runs: ${runs.map(r => f"$r%.2f").mkString(", ")})")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.queries.Catalog
 
 /** Smoke: every catalog query runs at sf0.001 and yields rows; the
@@ -29,6 +31,43 @@ class CatalogSpec extends SparkSpec {
     assert(m.isDefined, "README no longer states the catalog entry count")
     assert(m.get.group(1).toInt === Catalog.defs.size,
       s"README claims ${m.get.group(1)} entries; catalog has ${Catalog.defs.size}")
+  }
+
+  test("src/main builds sessions only in GraftSession (no session drift)") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val stream = java.nio.file.Files.walk(root)
+    val offenders =
+      try stream.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "GraftSession.scala")
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8)
+          .contains("SparkSession.builder()"))
+        .map(root.relativize(_).toString).toList
+      finally stream.close()
+    assert(offenders.isEmpty,
+      s"sessions built outside GraftSession: ${offenders.mkString(", ")}")
+  }
+
+  test("SparkEntry.select trims names, drops blanks and keeps list order") {
+    assert(SparkEntry.select(" q1_pricing_summary , ,bpe_merges,") ===
+      Seq("q1_pricing_summary", "bpe_merges"))
+  }
+
+  test("SparkEntry.select rejects unknown names, naming each of them") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select("q1_pricing_summary,no_such_entry,bpe_mergez"))
+    assert(e.getMessage.contains("no_such_entry"))
+    assert(e.getMessage.contains("bpe_mergez"))
+    assert(!e.getMessage.contains("q1_pricing_summary"))
+    intercept[IllegalArgumentException](SparkEntry.select(" , "))
+  }
+
+  test("Bench.jstr output parses back through Jackson unchanged") {
+    val s = "a\"b\\c\td\re\nf\u0001g"
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(Bench.jstr(s), classOf[String])
+    assert(back === s)
   }
 
   test("entry returns rows") {

@@ -5,10 +5,14 @@ Reads the Verify output dir (spark result parquet per query +
 oracle_sql.json), replays each oracle SQL in DuckDB against views over
 the sf parquet tables, and compares: schema (column names), row count,
 and values after sorting columns by name and rows by all columns.
+Every entry Verify recorded in _errors.json fails with its Spark
+exception. Exits 1 on any failure, and when nothing was compared (an
+empty or missing Verify output must not read as a pass).
 
 Usage: python3 tools/local_verify.py [sf_dir] [out_dir]
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -33,22 +37,33 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = 0
-    import os
+    errors_path = f"{out_dir}/_errors.json"
+    errors = (json.load(open(errors_path))
+              if os.path.exists(errors_path) else {})
+    n_pass = n_fail = n_rows = 0
+    # a query that threw in Verify wrote no output: report Verify's
+    # exception, not DuckDB's "output unreadable" (and not nothing, for
+    # an entry without an oracle)
+    for name, err in sorted(errors.items()):
+        print(f"FAIL {name}: {err}")
+        n_fail += 1
     for name in sorted(os.listdir(out_dir)):
         # skip sidecar files (oracle_sql.json, _errors.json) — only
         # query output DIRECTORIES are rows-only candidates
         if (name != "oracle_sql.json" and not name.startswith("_")
-                and name not in oracle):
+                and name not in oracle and name not in errors):
             try:
                 n = con.execute(
                     f"SELECT count(*) FROM '{out_dir}/{name}/*.parquet'"
                 ).fetchone()[0]
                 print(f"ROWS {name}: {n} rows (no oracle)")
+                n_rows += 1
             except Exception as e:
                 print(f"FAIL {name}: rows-only output unreadable: {e}")
                 n_fail += 1
     for name, sql in sorted(oracle.items()):
+        if name in errors:
+            continue
         try:
             got = con.execute(
                 f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
@@ -105,6 +120,9 @@ def main() -> int:
             print(w[bad].head(3).to_string())
             n_fail += 1
     print(f"== {n_pass} pass / {n_fail} fail ==")
+    if n_pass + n_fail + n_rows == 0:
+        print("FAIL: no entries compared")
+        return 1
     return 1 if n_fail else 0
 
 
