@@ -2,7 +2,7 @@ package graft.datapipe
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** THE staging-cache convention, in one place (every bare `.persist`
@@ -39,23 +39,31 @@ import org.apache.spark.storage.StorageLevel
 object Staging {
   private val live = new ConcurrentLinkedQueue[DataFrame]()
 
-  /** Staging mechanism (r18 optimization): `checkpoint` (default)
-    * stages through `localCheckpoint(eager = false)` — the staged
-    * frame becomes a leaf (`LogicalRDD`) in every downstream plan,
-    * truncating lineage, where `persist` leaves the full upstream
-    * tree inside an InMemoryRelation that every reference re-embeds.
-    * The composed entries' plans exploded combinatorially under
-    * persist (e2e_curation's initial plan: 30k lines, 3.6k Exchange
-    * nodes, 1.9k parquet-scan leaves for ONE query), and every AQE
-    * job re-walks that tree on the driver; with checkpoint staging
-    * the same query plans in hundreds of nodes. Both are
-    * MEMORY_AND_DISK-backed; the blocks live in
-    * `sparkContext.getPersistentRDDs`, which [[releaseAll]] sweeps.
-    * `SPARK_GRAFT_STAGE_MODE=persist` restores the cache-manager
-    * path (the escape hatch — also what a fault-tolerant cluster
-    * deployment may prefer: localCheckpoint blocks do not survive
-    * executor loss, the standard plan-truncation trade documented on
-    * Dataset.localCheckpoint).
+  /** The session conf that picks the staging mechanism, read from the
+    * staged frame's own session on every [[persist]]:
+    *
+    *  - `checkpoint` (default, r18 optimization) stages through
+    *    `localCheckpoint(eager = false)`: the staged frame becomes a
+    *    leaf (`LogicalRDD`) in every downstream plan, truncating
+    *    lineage. Under `persist` the full upstream tree sits inside an
+    *    InMemoryRelation that every reference re-embeds; the composed
+    *    entries' plans exploded combinatorially (e2e_curation's initial
+    *    plan: 30k lines, 3.6k Exchange nodes, 1.9k parquet-scan leaves
+    *    for ONE query), and every AQE job re-walks that tree on the
+    *    driver. With checkpoint staging the same query plans in
+    *    hundreds of nodes.
+    *  - `persist` keeps the cache-manager path. Set it on a cluster
+    *    (`--conf spark.graft.stage.mode=persist`, or builder
+    *    `.config`): localCheckpoint blocks die with their executor,
+    *    and a query that loses one fails, where a persisted frame
+    *    recomputes from lineage (the plan-truncation trade documented
+    *    on Dataset.localCheckpoint).
+    *
+    * Both are MEMORY_AND_DISK-backed, and both modes' blocks are swept
+    * by [[releaseAll]]. Any other value is rejected. Because the mode
+    * belongs to the session, `newSession()` clones, streaming
+    * `foreachBatch` frames and [[memo]] each stage in their own
+    * session's mode, and concurrent sessions never mix modes.
     *
     * WHEN the staged frame computes differs by mode: a persist-mode
     * frame fills its cache at the first downstream action, but in
@@ -68,17 +76,22 @@ object Staging {
     * the side work (ExplainDump does); Bench times construction and
     * action together, so the timed cost is unchanged.
     */
-  private def mode: String =
-    sys.props.getOrElse("graft.stage.mode",
-      sys.env.getOrElse("SPARK_GRAFT_STAGE_MODE", "checkpoint"))
+  val ModeConf = "spark.graft.stage.mode"
+
+  private def mode(session: SparkSession): String =
+    session.conf.get(ModeConf, "checkpoint") match {
+      case m @ ("checkpoint" | "persist") => m
+      case other => throw new IllegalArgumentException(
+        s"$ModeConf = '$other': expected 'checkpoint' or 'persist'")
+    }
 
   /** Persist a staging DataFrame (MEMORY_AND_DISK persist or lazy
-    * localCheckpoint per [[mode]]) and register it for
-    * [[releaseAll]]. Returns the staged frame.
+    * localCheckpoint per [[ModeConf]] in the frame's session) and
+    * register it for [[releaseAll]]. Returns the staged frame.
     */
   def persist(df: DataFrame): DataFrame = {
     val p =
-      if (mode == "checkpoint") df.localCheckpoint(false)
+      if (mode(df.sparkSession) == "checkpoint") df.localCheckpoint(false)
       else df.persist(StorageLevel.MEMORY_AND_DISK)
     live.add(p)
     p
@@ -142,30 +155,16 @@ object Staging {
     * Concurrency hazard, documented for library adopters: the
     * registry is PROCESS-global, so a releaseAll() from one thread
     * also drops caches another thread's in-flight query is still
-    * reading (correct but recomputed). Multi-tenant apps sharing one
-    * JVM should release per session ([[releaseAll(session)]]) at
-    * their own quiesce points. Strong refs are deliberate: an
-    * unpersist needs the frame, so a weak registry would strand
-    * caches in the session's CacheManager once the frame is GC'd.
+    * reading (recomputed in persist mode, failed as above for a
+    * materialized checkpoint frame): call it only where no query in
+    * the JVM is in flight. Strong refs are deliberate: an unpersist
+    * needs the frame, so a weak registry would strand caches in the
+    * session's CacheManager once the frame is GC'd.
     */
   def releaseAll(): Unit = {
     var df = live.poll()
     while (df != null) { release(df); df = live.poll() }
     memos.clear()
-  }
-
-  /** Unpersist only the staged frames belonging to `session` —
-    * the bound a long-lived multi-session app needs so one tenant's
-    * release never forces another tenant's recompute.
-    */
-  def releaseAll(session: org.apache.spark.sql.SparkSession): Unit = {
-    val it = live.iterator()
-    while (it.hasNext) {
-      val df = it.next()
-      if (df.sparkSession eq session) { release(df); it.remove() }
-    }
-    val mit = memos.keySet.iterator()
-    while (mit.hasNext) if (mit.next()._1 eq session) mit.remove()
   }
 
   /** Register an ALREADY-persisted frame for [[releaseAll]] — for
@@ -175,7 +174,20 @@ object Staging {
   def register(df: DataFrame): DataFrame = { live.add(df); df }
 
   private val memos =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+
+  /** Is the staged frame's backing storage still registered? For
+    * persist-mode frames this is the cache-manager level; for
+    * checkpoint-mode frames the LogicalRDD's RDD storage level (the
+    * frame itself never enters the cache manager).
+    */
+  private[graft] def isLive(df: DataFrame): Boolean =
+    df.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.getStorageLevel != StorageLevel.NONE &&
+          !releasedRddIds.contains(r.rdd.id)
+      case _ => df.storageLevel != StorageLevel.NONE
+    }
 
   /** Session-scoped MEMOIZED staging: several independent catalog
     * entries derive from one expensive shared intermediate (the
@@ -190,29 +202,14 @@ object Staging {
     * charge full cost. Callers must pick keys that capture EVERY
     * input that changes the frame (the sf dir, parameters).
     */
-  /** Is the staged frame's backing storage still registered? For
-    * persist-mode frames this is the cache-manager level; for
-    * checkpoint-mode frames the LogicalRDD's RDD storage level (the
-    * frame itself never enters the cache manager).
-    */
-  private[graft] def isLive(df: DataFrame): Boolean = liveLevel(df)
-
-  private def liveLevel(df: DataFrame): Boolean =
-    df.queryExecution.analyzed match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.getStorageLevel != StorageLevel.NONE &&
-          !releasedRddIds.contains(r.rdd.id)
-      case _ => df.storageLevel != StorageLevel.NONE
-    }
-
-  def memo(session: org.apache.spark.sql.SparkSession, key: String)
+  def memo(session: SparkSession, key: String)
           (build: => DataFrame): DataFrame = {
     val k = (session, key)
     val cur = memos.get(k)
-    if (cur != null && liveLevel(cur)) cur
+    if (cur != null && isLive(cur)) cur
     else memos.synchronized {
       val again = memos.get(k)
-      if (again != null && liveLevel(again)) again
+      if (again != null && isLive(again)) again
       else {
         val built = persist(build)
         memos.put(k, built)

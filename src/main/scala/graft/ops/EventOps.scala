@@ -105,6 +105,34 @@ object EventOps {
   def latencySeconds(ts: Column, nowMicros: Long = NowEpochMicros): Column =
     round((lit(nowMicros) - unix_micros(ts)) / 1e6, 6)
 
+  /** Aggregate: the exact p95 (linear interpolation, as Spark's
+    * `percentile` and DuckDB's `quantile_cont`) of integer-microsecond
+    * latencies, as seconds rounded half-up to 6 places. Taking
+    * `round(percentile(µs / 1e6), 6)` instead is not engine-exact:
+    * the double interpolation lands a ULP either side of a rounding
+    * tie differently per engine. Here the order statistic stays in
+    * integers: with k = 19(n−1), lo = ⌊k/20⌋ and r = k mod 20,
+    * 20·p95 = 20·x[lo] + r·(x[lo+1] − x[lo]) exactly, then one
+    * [[graft.functions.ExactRound.ratio6]] rounds it to seconds.
+    * NULL latencies are skipped; a group with none yields NULL.
+    *
+    * Oracle twin (DuckDB), over `xs = list_sort(list(lat_us))`,
+    * `k = (len(xs) - 1) * 19`, numerator widened to HUGEINT:
+    * `((2 * (20 * xs[k // 20 + 1] + (k % 20) * (xs[k // 20 + 2] -
+    * xs[k // 20 + 1])) * 1000000 + 20000000) // 40000000) /
+    * 1000000::DOUBLE`, the neighbour term taken only when k % 20 > 0.
+    */
+  def p95LatencySeconds(latUs: Column): Column = {
+    val xs = sort_array(collect_list(latUs.cast("long")))
+    val k = (size(xs).cast("long") - 1) * 19
+    val r = k % 20
+    val lo = ((k - r) / 20).cast("int") // exact: k − r is a multiple of 20
+    val xLo = element_at(xs, lo + 1)
+    val xHi = when(r === 0, xLo).otherwise(element_at(xs, lo + 2))
+    when(size(xs) > 0, graft.functions.ExactRound.ratio6(
+      xLo * 20 + r * (xHi - xLo), lit(20L * 1000000L)))
+  }
+
   /** P11: payload size in bytes. kafka_consumer.py:112-116. */
   def payloadBytes(payload: Column): Column =
     octet_length(payload).cast("bigint")

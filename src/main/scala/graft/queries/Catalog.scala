@@ -18,7 +18,11 @@ import graft.functions.PromHistogram
   *    partial aggregation and DuckDB's sequential sum agree bitwise;
   *  - derived seconds/latency values come from integer microsecond
   *    arithmetic divided by 1e6 (exact same IEEE op in both engines);
-  *  - quantile/interpolated outputs are rounded to 6 decimals;
+  *  - exact quantiles of integer inputs interpolate in integers (the
+  *    order statistic ×20 for p95, [[EventOps.p95LatencySeconds]])
+  *    and round once through [[graft.functions.ExactRound]]; a
+  *    `round(…, 6)` over an interpolated double rounds ties
+  *    differently per engine;
   *  - output columns are string/bigint/double/boolean only (no raw
   *    timestamps: the source parquet is nanos, engines differ in
   *    precision).
@@ -804,16 +808,22 @@ object Catalog {
       Tables.events(s, d)
         .select(Seq(col("event_type"),
           EventOps.secondsBucket(col("ts"), 86400).as("bucket_ts"),
-          ((lit(Now) - unix_micros(col("ts"))) / lit(1000000.0)).as("lat"))
+          (lit(Now) - unix_micros(col("ts"))).as("lat_us"))
           ++ labels: _*)
         .groupBy(col("bucket_ts"), col("event_type"),
           col("ssi_validation"), col("cache_did"), col("processing_mode"))
-        .agg(round(expr("percentile(lat, 0.95D)"), 6).as("p95_latency_s"))
+        .agg(EventOps.p95LatencySeconds(col("lat_us")).as("p95_latency_s"))
     },
-    Some(s"""SELECT (epoch_us(ts) // 86400000000) * 86400 AS bucket_ts, event_type,
+    Some(s"""WITH g AS (SELECT (epoch_us(ts) // 86400000000) * 86400 AS bucket_ts,
+          event_type, list_sort(list($Now - epoch_us(ts))) AS xs
+        FROM events GROUP BY 1, 2),
+      o AS (SELECT bucket_ts, event_type, xs, (len(xs) - 1) * 19 AS k FROM g)
+      SELECT bucket_ts, event_type,
       'true' AS ssi_validation, 'true' AS cache_did, 'sync' AS processing_mode,
-      round(quantile_cont(($Now - epoch_us(ts)) / 1000000.0, 0.95), 6) AS p95_latency_s
-      FROM events GROUP BY 1, 2"""))
+      ((2 * (20 * CAST(xs[k // 20 + 1] AS HUGEINT) + (k % 20) *
+          CASE WHEN k % 20 = 0 THEN 0 ELSE xs[k // 20 + 2] - xs[k // 20 + 1] END)
+        * 1000000 + 20000000) // 40000000) / 1000000::DOUBLE AS p95_latency_s
+      FROM o"""))
 
   /** Q1 scale path: the exact `percentile` above buffers every value
     * per group — OOM-bait at 100×. This variant is the

@@ -33,20 +33,36 @@ class CatalogSpec extends SparkSpec {
       s"README claims ${m.get.group(1)} entries; catalog has ${Catalog.defs.size}")
   }
 
+  /** Paths (relative to `root`) of the .scala files under `root`
+    * whose text satisfies `bad`. */
+  private def scalaSourcesWhere(root: String)(bad: String => Boolean): List[String] = {
+    val base = java.nio.file.Paths.get(root)
+    val stream = java.nio.file.Files.walk(base)
+    try stream.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => bad(new String(java.nio.file.Files.readAllBytes(p),
+        java.nio.charset.StandardCharsets.UTF_8)))
+      .map(base.relativize(_).toString).toList
+    finally stream.close()
+  }
+
   test("src/main builds sessions only in GraftSession (no session drift)") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val stream = java.nio.file.Files.walk(root)
-    val offenders =
-      try stream.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") &&
-          p.getFileName.toString != "GraftSession.scala")
-        .filter(p => new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)
-          .contains("SparkSession.builder()"))
-        .map(root.relativize(_).toString).toList
-      finally stream.close()
+    val offenders = scalaSourcesWhere("src/main/scala")(
+      _.contains("SparkSession.builder()"))
+      .filterNot(_.endsWith("/GraftSession.scala"))
     assert(offenders.isEmpty,
       s"sessions built outside GraftSession: ${offenders.mkString(", ")}")
+  }
+
+  test("src reads the staging mode only from the session conf (no " +
+    "process-global switch)") {
+    // split so this file does not match its own patterns
+    val envVar = "SPARK_GRAFT_" + "STAGE_MODE"
+    val propRead = ("sys\\.props[^\\n]*\"" + "graft\\.stage\\.mode\"").r
+    val offenders = scalaSourcesWhere("src")(text =>
+      text.contains(envVar) || propRead.findFirstIn(text).isDefined)
+    assert(offenders.isEmpty,
+      s"process-global staging mode read in: ${offenders.mkString(", ")}")
   }
 
   test("SparkEntry.select trims names, drops blanks and keeps list order") {

@@ -7,16 +7,8 @@ package graft
   */
 class RoundTenPlanSpec extends SparkSpec {
 
-  // Plan pins inspect the STAGED pipelines' internals; checkpoint
-  // staging (the r18 default) truncates staged subtrees to LogicalRDD
-  // leaves, so the pins run under persist staging — the pipeline
-  // SHAPE they certify is identical in both modes, persist just keeps
-  // it visible in the composed plan.
   private def plan(name: String): String =
-    try {
-      sys.props("graft.stage.mode") = "persist"
-      SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
-    } finally sys.props.remove("graft.stage.mode")
+    persistStagedPlan(SparkEntry.queries(name)(_, sf))
 
   test("q_funnel: stage elections are aggregations + equi-joins, " +
     "never a window over the raw stream") {
